@@ -81,7 +81,7 @@ from openetl_spark.queries.media_mining import (  # noqa: F401,E402
 )
 
 
-def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver smoke query: the regional-revenue star join."""
     return QUERIES["q5_regional_revenue"](spark, sf_dir)
 

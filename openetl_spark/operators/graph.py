@@ -17,6 +17,18 @@ every round with ``localCheckpoint`` exactly as
 ``connected_components`` does (iterative self-joins otherwise grow the
 logical plan superlinearly; see that docstring for the measured
 rationale).
+
+Input contract: the undirected operators (every operator built on
+``_undirected_simple``, plus ``bfs_hops``, ``sssp``, ``landmark_hops``
+and ``landmark_path_counts``) take CANONICAL edges — ``src < dst``, no
+self-loops, no duplicate pairs, and for weighted input one row per
+pair. The persisted graph layouts are canonical by construction
+(``queries/analytics_r07._graph_layout`` writes ``canonicalize()``'s
+output); raw edge lists go through ``canonicalize()`` once, at the
+boundary, instead of every operator re-normalizing its input.
+``contract_graph``, ``louvain_refine`` and ``harmonic_centrality``
+(without ``hops``) accept raw edges and canonicalize them themselves;
+``pagerank`` reads a directed edge list and is outside the contract.
 """
 
 from __future__ import annotations
@@ -254,81 +266,76 @@ def pagerank(
     return ranks.select("node", "rank")
 
 
+def canonicalize(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str | None = None,
+) -> DataFrame:
+    """The canonical form of an undirected edge list — the input
+    contract of this module's graph operators (module docstring):
+    every edge oriented ``src < dst`` (least/greatest), self-loops
+    dropped, duplicate and reversed pairs collapsed to one row. With
+    ``weight``, parallel edges collapse to their MINIMUM weight (the
+    shortest-path reading of a multigraph; NULL weights are ignored by
+    the min, so an all-NULL pair keeps a NULL weight, which ``sssp``
+    drops). Columns keep their names: (src, dst) or (src, dst,
+    weight).
+
+    Lazy — one distinct (or min-aggregate) shuffle when executed.
+    Callers that read the result more than once materialize it
+    (``localCheckpoint``) or persist it, as ``_graph_layout`` does by
+    writing it to parquet."""
+    e = edges.select(
+        F.least(F.col(src), F.col(dst)).alias(src),
+        F.greatest(F.col(src), F.col(dst)).alias(dst),
+        *([F.col(weight)] if weight is not None else []),
+    ).filter(F.col(src) != F.col(dst))
+    if weight is None:
+        return e.distinct()
+    return e.groupBy(src, dst).agg(F.min(weight).alias(weight))
+
+
 def _undirected_simple(
     edges: DataFrame,
     src: str,
     dst: str,
-    assume_canonical: bool = False,
     materialize: bool = False,
 ):
-    """(und, deg) of the undirected simple graph induced by ``edges``:
-    canonical a<b pairs (self-loops dropped, multi/reversed edges
-    collapsed, materialized once) and per-node degrees. Shared by
-    triangle_stats and degree_assortativity so the normalization can
-    never diverge between them.
+    """(und, deg) of the undirected simple graph of the canonical
+    ``edges``: the pairs renamed to (a, b), a < b, and per-node
+    degrees. Shared by every undirected operator so the degree
+    definition can never diverge between them.
 
-    ``assume_canonical`` (r12 optimization): the persisted graph
-    layouts ARE this canonical relation already (a < b, self-loops
-    dropped, distinct — exactly what _graph_layout writes), so
-    re-canonicalizing a layout read pays a full edge-relation shuffle
-    for an identity transform (guide §2.4: "a distinct on data that is
-    already unique") plus a redundant localCheckpoint copy of data
-    that is already a materialized parquet artifact. With the flag the
-    caller asserts canonicality and the relation is a plain aliased
-    scan — no shuffle, no checkpoint job, and Catalyst keeps the
-    scan's size statistics for downstream join planning (the
-    localCheckpoint-hides-stats lesson). Correctness posture: every
-    consumer's oracle re-derives the graph from lineitem, so a wrong
-    assertion can only red out as a hash mismatch, never wrong-green;
-    a unit test additionally pins flag-on ≡ flag-off on the layout
-    relation.
-
-    ``materialize`` (r13, VERDICT r12 #1): only meaningful with
-    ``assume_canonical``. Operators that re-read ``und`` several times
-    (the peel ladders, the wedge self-joins, the moment aggregate's
-    sym+deg double read) previously had to choose between the flag-off
-    path — which materializes und via localCheckpoint at an
-    AQE-right-sized width but pays a full edge-relation identity
-    shuffle — and the flag-on bare scan, which deletes the shuffle but
-    re-reads parquet per round at the writer's task width (measured
-    1.2–1.6× slower at sf0.1 from per-round task overhead, the r12
-    reverts). This knob keeps BOTH properties: the scan is coalesced
-    to the SAME size-derived width AQE would have left after the
-    deleted exchange (relation bytes / advisoryPartitionSizeInBytes,
-    floor 1 — coalesce narrows without moving bytes across the
-    network, and is a no-op when the size-derived width exceeds the
-    scan's split count, i.e. at corpus scale) and localCheckpointed
-    once, so repeat readers hit an in-memory relation at the
-    AQE-equivalent task width while the corpus-scale distinct shuffle
-    stays deleted. A/B note: a defaultParallelism-width coalesce was
-    tried first and measured 1.5–1.6× SLOWER than flag-off at sf0.1 —
-    the flag-off advantage was never the shuffle, it was AQE packing
-    the ~20 MB relation into one advisory-sized partition; this
-    mirrors that byte target exactly."""
-    if assume_canonical:
-        und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        if materialize:
-            sess = edges.sparkSession
-            advisory = sess._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                sess.conf.get(
-                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-                )
+    ``materialize``: operators that re-read ``und`` several times (the
+    peel ladders, the wedge self-joins, the moment aggregate's sym+deg
+    double read) localCheckpoint it once, coalesced to the width AQE
+    would pick after a shuffle of the same bytes (relation bytes /
+    ``advisoryPartitionSizeInBytes``, floor 1). Coalesce narrows
+    without moving bytes and is a no-op when that width exceeds the
+    scan's split count, i.e. at corpus scale. Repeat readers then hit
+    an in-memory relation at a packed task width instead of re-reading
+    parquet at the writer's width each round (measured 1.2–1.6×
+    slower at sf0.1). The byte size comes from the optimized plan's
+    statistics, which Catalyst estimates from the unfiltered scan: on
+    a filtered input such as the ``w >= 2`` core the estimate — and so
+    the width — overshoots the rows that survive the filter."""
+    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if materialize:
+        sess = edges.sparkSession
+        advisory = sess._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            sess.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
             )
-            size = int(
-                und._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            target = max(1, -(-size // max(1, advisory)))  # ceil div
-            und = und.coalesce(target).localCheckpoint()
-    else:
-        und = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
         )
+        size = int(
+            und._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        # ceil div; an unknown size (RDD-backed input reports
+        # Long.MaxValue) caps at Java's int range, where coalesce is a
+        # no-op
+        target = min(max(1, -(-size // max(1, advisory))), 2**31 - 1)
+        und = und.coalesce(target).localCheckpoint()
     deg = (
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b").alias("node")))
@@ -343,11 +350,9 @@ def triangle_stats(
     src: str = "src",
     dst: str = "dst",
     triangles: DataFrame | None = None,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient of the
-    UNDIRECTED simple graph induced by ``edges`` (self-loops dropped,
-    multi-edges collapsed, direction ignored).
+    UNDIRECTED simple graph of the canonical ``edges``.
 
     The scalable shape (Suri & Vassilvitskii, WWW 2011 node-iterator++
     / MR triangle counting): orient every undirected edge from its
@@ -373,7 +378,7 @@ def triangle_stats(
     from it. Callers own the edges↔triangles consistency contract
     (the layout's fingerprint discipline).
     """
-    und, deg = _undirected_simple(edges, src, dst, assume_canonical)
+    und, deg = _undirected_simple(edges, src, dst)
     if triangles is not None:
         tri = triangles.agg(F.count("*").alias("n_triangles"))
     else:
@@ -410,7 +415,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 10,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Multi-source breadth-first search over the UNDIRECTED graph of
     ``edges``: minimum hop distance from the ``sources`` node set
@@ -431,16 +435,13 @@ def bfs_hops(
     """
     from pyspark.sql import Observation
 
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    # Canonical input: both orientations are distinct by construction.
+    # Checkpointed because it is consumed once per frontier round.
+    sym = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .localCheckpoint()
     )
-    if not assume_canonical:
-        sym = sym.filter(F.col("u") != F.col("v")).distinct()
-    # canonical input (a < b distinct simple): both orientations are
-    # distinct by construction, so the dedup shuffle is an identity —
-    # skipped (r12, guide §2.4). The checkpoint stays in both paths:
-    # sym is consumed once per frontier round.
-    sym = sym.localCheckpoint()
     seed_col = sources.columns[0]
     visited = (
         sources.select(F.col(seed_col).alias("node"))
@@ -487,7 +488,6 @@ def degree_assortativity(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Degree assortativity coefficient (Newman, PRL 2002): the Pearson
     correlation of the degrees at the two ends of every edge of the
@@ -504,9 +504,7 @@ def degree_assortativity(
     presentation rounding. Returns one row: n_edges, assortativity
     (NULL on degree-regular graphs, where the variance is 0).
     """
-    und, deg = _undirected_simple(
-        edges, src, dst, assume_canonical, materialize=True
-    )
+    und, deg = _undirected_simple(edges, src, dst, materialize=True)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -542,7 +540,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 8,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """The k-core of the undirected simple graph: the maximal subgraph
     in which every node has degree ≥ k (Seidman 1983), found by
@@ -575,9 +572,7 @@ def kcore(
 
     from pyspark.sql import Observation
 
-    und, deg = _undirected_simple(
-        edges, src, dst, assume_canonical, materialize=True
-    )
+    und, deg = _undirected_simple(edges, src, dst, materialize=True)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()
@@ -647,7 +642,6 @@ def core_numbers(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 12,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Core DECOMPOSITION — the maximum k such that each node belongs
     to the k-core (Seidman 1983; Batagelj-Zaversnik's peel order, here
@@ -675,9 +669,7 @@ def core_numbers(
 
     if max_k < 2:
         raise ValueError(f"core_numbers: max_k must be >= 2, got {max_k}")
-    und, _ = _undirected_simple(
-        edges, src, dst, assume_canonical, materialize=True
-    )
+    und, _ = _undirected_simple(edges, src, dst, materialize=True)
     sym = (
         und.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -880,7 +872,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al., Phys. Rev. E 2007) over the undirected simple graph of
@@ -909,7 +900,7 @@ def label_propagation(
 
     Returns (node, label) for every node with ≥ 1 incident edge.
     """
-    und, _ = _undirected_simple(edges, src, dst, assume_canonical)
+    und, _ = _undirected_simple(edges, src, dst)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()
@@ -941,7 +932,6 @@ def sssp(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 6,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Single/multi-source shortest paths over the UNDIRECTED weighted
     graph of ``edges`` by frontier-based Bellman-Ford: ``max_rounds``
@@ -987,21 +977,12 @@ def sssp(
     base = edges.filter(w.isNotNull()).select(
         F.col(src).alias("u"), F.col(dst).alias("v"), w.alias("w")
     )
-    # Parallel edges collapse to their cheapest; both directions usable.
+    # Canonical input has one row per pair (parallel edges already
+    # collapsed to their cheapest by canonicalize); both directions
+    # are usable.
     sym = base.union(
         base.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
-    if not assume_canonical:
-        # parallel edges collapse to their cheapest; for the canonical
-        # weighted layout (unique a < b pairs, no self-loops) the
-        # min-aggregate shuffled 2x|E| rows for an identity — skipped
-        # (r12, guide §2.4).
-        sym = (
-            sym.filter(F.col("u") != F.col("v"))
-            .groupBy("u", "v")
-            .agg(F.min("w").alias("w"))
-        )
-    sym = sym.localCheckpoint()
+    ).localCheckpoint()
     seed_col = sources.columns[0]
     # Seed distance takes the WEIGHT's type so every round's dist + w
     # and the dist-table unions stay one type (bigint weights never
@@ -1056,7 +1037,6 @@ def modularity(
     labels: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Newman modularity Q of a node partition over the undirected
     simple graph of ``edges`` (Newman & Girvan 2004): Q = Σ_c [e_c/m −
@@ -1081,7 +1061,7 @@ def modularity(
     row: n_edges, n_communities, internal_edges, sum_deg_sq,
     modularity (NULL on an empty graph).
     """
-    und, deg = _undirected_simple(edges, src, dst, assume_canonical)
+    und, deg = _undirected_simple(edges, src, dst)
     n_node, n_label = labels.columns[0], labels.columns[1]
     lab = labels.select(
         F.col(n_node).alias("node"), F.col(n_label).alias("label")
@@ -1134,7 +1114,6 @@ def louvain_move(
     src: str = "src",
     dst: str = "dst",
     pre: tuple[DataFrame, DataFrame] | None = None,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """ONE synchronous Louvain local-move pass (Blondel, Guillaume,
     Lambiotte & Lefebvre, J. Stat. Mech. 2008, phase 1) over the
@@ -1172,10 +1151,9 @@ def louvain_move(
     window over the corpus. m is a 1-row broadcast.
 
     ``pre`` (r09): a precomputed ``_undirected_simple`` result
-    (und, deg) — callers that already hold the canonical edge list
-    (louvain_multilevel runs this pass plus four guard keys and two
-    contractions on ONE graph) pass it to skip the corpus-wide
-    re-canonicalization shuffle this function would otherwise redo.
+    (und, deg) — callers that already hold it (louvain_multilevel runs
+    this pass plus four guard keys and two contractions on ONE graph)
+    pass it to share one degree relation.
 
     Returns (node, label): the post-move partition, same node set as
     ``labels`` restricted to nodes of the graph.
@@ -1183,7 +1161,7 @@ def louvain_move(
     und, deg = (
         pre
         if pre is not None
-        else _undirected_simple(edges, src, dst, assume_canonical)
+        else _undirected_simple(edges, src, dst)
     )
     n_node, n_label = labels.columns[0], labels.columns[1]
     lab = labels.select(
@@ -1278,7 +1256,6 @@ def ktruss(
     dst: str = "dst",
     max_rounds: int = 3,
     seed_triangles: DataFrame | None = None,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """The k-truss of the undirected simple graph: the maximal
     subgraph in which every EDGE participates in ≥ k−2 triangles of
@@ -1316,7 +1293,7 @@ def ktruss(
 
     if k < 3:
         raise ValueError(f"ktruss: k must be >= 3 (edges need k-2 >= 1 triangles), got {k}")
-    cur, _ = _undirected_simple(edges, src, dst, assume_canonical)
+    cur, _ = _undirected_simple(edges, src, dst)
     prev_n = cur.count()
     converged = prev_n == 0
     for rnd in range(max_rounds):
@@ -1478,10 +1455,14 @@ def contract_graph(
     Returns (a, b, w) with a ≤ b (self-loops a = b carry the internal
     edge count). Nodes missing from ``labels`` are dropped with their
     edges (unlabeled is not a community — the modularity() contract).
-    ``pre``: precomputed ``_undirected_simple`` result, as in
-    louvain_move.
+    ``edges`` may be raw — they are canonicalized here. ``pre``:
+    precomputed ``_undirected_simple`` result, as in louvain_move.
     """
-    und, _ = pre if pre is not None else _undirected_simple(edges, src, dst)
+    und, _ = (
+        pre
+        if pre is not None
+        else _undirected_simple(canonicalize(edges, src, dst), src, dst)
+    )
     n_node, n_label = labels.columns[0], labels.columns[1]
     lab = labels.select(
         F.col(n_node).alias("node"), F.col(n_label).alias("label")
@@ -1638,13 +1619,19 @@ def louvain_refine(
     observe()-class boundary every iterative operator here already
     crosses for its stopping decision).
 
+    ``edges`` may be raw: they are canonicalized once here, and the
+    contraction and both modularity scores read that relation.
+
     Returns (node, label): the better of {input, refined} partitions.
     """
+    canon = canonicalize(edges, src, dst).localCheckpoint()
     n_node, n_label = labels.columns[0], labels.columns[1]
     lab1 = labels.select(
         F.col(n_node).alias("node"), F.col(n_label).alias("label")
     ).filter(F.col("label").isNotNull()).localCheckpoint()
-    sup = contract_graph(edges, lab1).localCheckpoint()
+    sup = contract_graph(
+        canon, lab1, pre=_undirected_simple(canon, src, dst)
+    ).localCheckpoint()
     sup_lab0 = (
         sup.select(F.col("a").alias("node"))
         .union(sup.select(F.col("b").alias("node")))
@@ -1665,7 +1652,7 @@ def louvain_refine(
     )
 
     def _score(lab: DataFrame) -> int:
-        row = modularity(edges, lab, src, dst).first()
+        row = modularity(canon, lab, src, dst).first()
         # 4m·I − S: exact-bigint ordering of Q at fixed m
         return 4 * row["n_edges"] * row["internal_edges"] - row["sum_deg_sq"]
 
@@ -1679,7 +1666,6 @@ def trussness(
     dst: str = "dst",
     max_rounds: int = 4,
     seed_triangles: DataFrame | None = None,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Truss DECOMPOSITION (VERDICT r08 #5): the maximum k such that
     each edge belongs to the k-truss — the edge-analog of k-core's
@@ -1706,9 +1692,7 @@ def trussness(
     """
     if max_k < 3:
         raise ValueError(f"trussness: max_k must be >= 3, got {max_k}")
-    cur, _ = _undirected_simple(edges, src, dst, assume_canonical)
-    if not assume_canonical:
-        cur = cur.localCheckpoint()
+    cur, _ = _undirected_simple(edges, src, dst)
     spark = cur.sparkSession
     out = spark.createDataFrame([], "a long, b long, trussness int")
     for k in range(3, max_k + 1):
@@ -1721,11 +1705,6 @@ def trussness(
             dst="b",
             max_rounds=max_rounds,
             seed_triangles=seed_triangles if k == 3 else None,
-            # cur is canonical by construction at every level (either
-            # _undirected_simple's output or the previous level's
-            # survivor set) — re-canonicalizing inside each ktruss
-            # level paid one redundant edge shuffle PER LEVEL (r12).
-            assume_canonical=True,
         )
         nxt = nxt.localCheckpoint()
         peeled = cur.join(nxt, ["a", "b"], "left_anti").select(
@@ -1746,101 +1725,12 @@ def trussness(
     )
 
 
-# r13 (VERDICT r12 #5): the level loop of louvain_multilevel runs on
-# the CONTRACTED supergraph — community-cardinality-sized data that
-# the distributed rendering still charges ~10 exchanges per level for
-# (measured 1.9–2.0 s/level warm at sf0.1 on relations of a few
-# thousand rows — pure fixed cost). Below this super-EDGE bound the
-# loop folds driver-side in exact bigint arithmetic (the pagerank /
-# qdigest bounded-relation driver-solve class: threshold-guarded,
-# fresh collect per invocation, fold ≡ distributed pinned by a unit
-# test). All louvain guard keys are exact integers, so unlike the
-# pagerank fold there is no float-order caveat — the fold is
-# bit-identical, not just rounded-surface-identical.
-_LOUVAIN_FOLD_MAX_EDGES = 100_000
-
-
-def _louvain_levels_local(
-    sup_rows: list, stot_rows: list, m: int, levels: int, best_key: int
-):
-    """The louvain_multilevel level loop on collected supergraph rows:
-    per level, one swap-guarded singleton-seeded weighted move pass
-    (louvain_move_weighted's exact-integer score 2m·k − d·Σtot', ties
-    to the smallest label), the exact guard key 4m·I − S from the
-    composed stot, and — on strict improvement — contraction + stot
-    composition. Returns (accepted_map_or_None, best_key):
-    ``accepted_map`` composes every ACCEPTED level's relabeling
-    (old supernode label -> final label) or None when no level
-    improved. Pure integer arithmetic throughout: every operation is
-    order-independent, so the unordered collect cannot perturb the
-    result."""
-    edges = {}
-    for a, b, w in sup_rows:
-        edges[(int(a), int(b))] = edges.get((int(a), int(b)), 0) + int(w)
-    stot = {int(c): int(st) for c, st in stot_rows}
-    accepted = None
-    for _ in range(levels):
-        deg: dict = {}
-        for (a, b), w in edges.items():
-            if a == b:
-                deg[a] = deg.get(a, 0) + 2 * w
-            else:
-                deg[a] = deg.get(a, 0) + w
-                deg[b] = deg.get(b, 0) + w
-        # Singleton seeds + swap guard (c <= node): each node's
-        # candidates are its own community (k = 0, Σtot' = d_i − d_i =
-        # 0, score exactly 0) and every LOWER-labelled neighbor c with
-        # k = w(node, c), Σtot'(c) = d_c. Winner by (score DESC,
-        # label ASC) — the min_by struct((-score), c) total order.
-        best_c = {node: (0, node) for node in deg}
-        for (a, b), w in edges.items():
-            if a == b:
-                continue
-            # canonical a < b: only the higher endpoint b may move
-            # (candidate a <= b passes the guard; b > a is filtered)
-            sc = 2 * m * w - deg[b] * deg[a]
-            cur = best_c[b]
-            cand = (sc, a)
-            if cand[0] > cur[0] or (cand[0] == cur[0] and cand[1] < cur[1]):
-                best_c[b] = cand
-        moved = {node: c for node, (_, c) in best_c.items()}
-        i_sum = 0
-        for (a, b), w in edges.items():
-            if moved[a] == moved[b]:
-                i_sum += w
-        new_st: dict = {}
-        for c, st in stot.items():
-            l = moved[c]
-            new_st[l] = new_st.get(l, 0) + st
-        s_sum = sum(st * st for st in new_st.values())
-        pk = 4 * m * i_sum - s_sum
-        if pk <= best_key:
-            # rejected: the next level would re-run the identical pass
-            # on the unchanged supergraph — a no-op, exactly as in the
-            # distributed loop
-            break
-        best_key = pk
-        if accepted is None:
-            accepted = dict(moved)
-        else:
-            accepted = {orig: moved[l] for orig, l in accepted.items()}
-        contracted: dict = {}
-        for (a, b), w in edges.items():
-            la, lb = moved[a], moved[b]
-            key = (la, lb) if la <= lb else (lb, la)
-            contracted[key] = contracted.get(key, 0) + w
-        edges = contracted
-        stot = new_st
-    return accepted, best_key
-
-
 def louvain_multilevel(
     edges: DataFrame,
     labels: DataFrame,
     levels: int = 2,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """The MULTI-LEVEL Louvain loop (Blondel et al. 2008, the full
     algorithm; VERDICT r08 #3): one synchronous local-move pass over
@@ -1882,7 +1772,7 @@ def louvain_multilevel(
         .filter(F.col("label").isNotNull())
         .localCheckpoint()
     )
-    und, deg = _undirected_simple(edges, src, dst, assume_canonical)
+    und, deg = _undirected_simple(edges, src, dst)
     deg = deg.localCheckpoint()
     # m from the MATERIALIZED degree relation (Σd = 2·|E| exactly) —
     # r13: und.count() was a second edge-scale pass over the corpus
@@ -2027,7 +1917,6 @@ def random_walks(
     seed: int = 42,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Deterministic seeded RANDOM WALKS over the undirected simple
     graph — the sampling primitive of node2vec/DeepWalk-style
@@ -2053,7 +1942,7 @@ def random_walks(
     """
     if length < 1:
         raise ValueError(f"random_walks: length must be >= 1, got {length}")
-    und, _ = _undirected_simple(edges, src, dst, assume_canonical)
+    und, _ = _undirected_simple(edges, src, dst)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()
@@ -2111,7 +2000,6 @@ def landmark_hops(
     max_hops: int = 6,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-LANDMARK hop distances over the undirected simple graph:
     (source, node, hop) for every landmark s and every node within
@@ -2132,16 +2020,13 @@ def landmark_hops(
     """
     from pyspark.sql import Observation
 
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    # Canonical input: both orientations are distinct by construction.
+    # Checkpointed because it is consumed once per frontier round.
+    sym = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .localCheckpoint()
     )
-    if not assume_canonical:
-        sym = sym.filter(F.col("u") != F.col("v")).distinct()
-    # canonical input (a < b distinct simple): both orientations are
-    # distinct by construction, so the dedup shuffle is an identity —
-    # skipped (r12, guide §2.4). The checkpoint stays in both paths:
-    # sym is consumed once per frontier round.
-    sym = sym.localCheckpoint()
     s_col = landmarks.columns[0]
     visited = (
         landmarks.select(F.col(s_col).alias("source"))
@@ -2175,7 +2060,6 @@ def landmark_path_counts(
     max_hops: int = 6,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-landmark shortest-path COUNTS σ_s(v) (Brandes, "A Faster
     Algorithm for Betweenness Centrality", JMS 2001 — the forward
@@ -2199,16 +2083,13 @@ def landmark_path_counts(
     """
     from pyspark.sql import Observation
 
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    # Canonical input: both orientations are distinct by construction.
+    # Checkpointed because it is consumed once per frontier round.
+    sym = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .localCheckpoint()
     )
-    if not assume_canonical:
-        sym = sym.filter(F.col("u") != F.col("v")).distinct()
-    # canonical input (a < b distinct simple): both orientations are
-    # distinct by construction, so the dedup shuffle is an identity —
-    # skipped (r12, guide §2.4). The checkpoint stays in both paths:
-    # sym is consumed once per frontier round.
-    sym = sym.localCheckpoint()
     s_col = landmarks.columns[0]
     visited = (
         landmarks.select(F.col(s_col).alias("source"))
@@ -2419,10 +2300,12 @@ def harmonic_centrality(
         )
     # ``hops``: optional precomputed landmark_hops relation for EXACTLY
     # (edges, landmarks, max_hops) — e.g. a corpus-keyed persisted
-    # layout; callers own the consistency contract.
+    # layout; callers own the consistency contract. Without it, raw
+    # ``edges`` are canonicalized for landmark_hops here.
     if hops is None:
         hops = landmark_hops(
-            edges, landmarks, max_hops=max_hops, src=src, dst=dst
+            canonicalize(edges, src, dst), landmarks, max_hops=max_hops,
+            src=src, dst=dst,
         )
     return (
         hops.filter(F.col("hop") >= 1)
@@ -2564,7 +2447,6 @@ def local_clustering(
     src: str = "src",
     dst: str = "dst",
     triangles: DataFrame | None = None,
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-node LOCAL clustering coefficient (Watts & Strogatz, Nature
     1998) of the undirected simple graph: for each node with degree
@@ -2586,9 +2468,7 @@ def local_clustering(
     irrelevant here — only the three corners are read — so any
     enumeration of the same triangle set works.
     """
-    und, deg = _undirected_simple(
-        edges, src, dst, assume_canonical, materialize=True
-    )
+    und, deg = _undirected_simple(edges, src, dst, materialize=True)
     tri = triangles if triangles is not None else _oriented_triangles(und, deg)
     per_node = (
         tri.select(F.explode(F.array("u", "a", "b")).alias("node"))
@@ -2617,7 +2497,6 @@ def link_prediction_features(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Link-prediction CANDIDATE features (Liben-Nowell & Kleinberg,
     CIKM 2003) over the undirected simple graph: for every NON-edge
@@ -2638,9 +2517,7 @@ def link_prediction_features(
     by running on a w-thresholded core, exactly as the k-truss family
     does).
     """
-    und, deg = _undirected_simple(
-        edges, src, dst, assume_canonical, materialize=True
-    )
+    und, deg = _undirected_simple(edges, src, dst, materialize=True)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -2683,7 +2560,6 @@ def node2vec_walks(
     w_out: int = 1,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """SECOND-ORDER biased random walks (node2vec, Grover & Leskovec
     KDD 2016 §3.2) with the same cross-engine determinism contract as
@@ -2713,7 +2589,7 @@ def node2vec_walks(
         raise ValueError(f"node2vec_walks: length must be >= 1, got {length}")
     if min(w_return, w_stay, w_out) < 1:
         raise ValueError("node2vec_walks: weights must be >= 1")
-    und, _ = _undirected_simple(edges, src, dst, assume_canonical)
+    und, _ = _undirected_simple(edges, src, dst)
     und = und.localCheckpoint()
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -2810,7 +2686,6 @@ def link_prediction_eval(
     ks: Sequence[int] = (1, 5, 10),
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Link-prediction EVALUATION harness (the ann/pq/lsh
     recall-report discipline applied to C137's candidate features):
@@ -2841,7 +2716,7 @@ def link_prediction_eval(
 
     if holdout_mod < 2:
         raise ValueError(f"link_prediction_eval: holdout_mod={holdout_mod} < 2")
-    und, _ = _undirected_simple(edges, src, dst, assume_canonical)
+    und, _ = _undirected_simple(edges, src, dst)
     h = (
         F.conv(
             F.substring(
@@ -2863,7 +2738,13 @@ def link_prediction_eval(
     marked = und.withColumn("_t", (h == 0).cast("int")).localCheckpoint()
     test = marked.filter(F.col("_t") == 1).select("a", "b")
     train = marked.filter(F.col("_t") == 0).select("a", "b")
-    feats = link_prediction_features(train, src="a", dst="b")
+    # train is already canonical (a subset of und), so this canonicalize
+    # is an identity; it is kept to leave the catalog's
+    # link_prediction_hits plan and job count unchanged — dropping it
+    # saves the distinct's two jobs.
+    feats = link_prediction_features(
+        canonicalize(train, "a", "b"), src="a", dst="b"
+    )
     both = feats.select(
         F.col("a").alias("node"), F.col("b").alias("v"), "cn", "jden"
     ).unionByName(

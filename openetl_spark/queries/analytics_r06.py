@@ -305,8 +305,11 @@ CO_PURCHASE_CTE = """co AS (
 
 
 def co_purchase_edges(spark, sf_dir):
-    """Spark twin of CO_PURCHASE_CTE (raw pairs; the graph operators
-    canonicalize/dedup internally)."""
+    """Spark twin of CO_PURCHASE_CTE before its DISTINCT: x < y pairs,
+    one row per co-occurrence, so not canonical. The graph operators
+    take canonical edges — pass these through
+    ``operators.graph.canonicalize`` (as ``_graph_layout`` does), or
+    read the persisted layout via ``_layout_edges``."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     return a.join(
@@ -380,13 +383,7 @@ def q_graph_triangles(spark, sf_dir):
     from openetl_spark.queries.analytics_r07 import _triangle_layout
 
     tri = spark.read.parquet(_triangle_layout(spark, sf_dir))
-    return G.triangle_stats(
-        # the layout IS the canonical relation — skip the identity
-        # re-canonicalization shuffle (r12, guide §2.4)
-        _layout_edges(spark, sf_dir),
-        triangles=tri,
-        assume_canonical=True,
-    )
+    return G.triangle_stats(_layout_edges(spark, sf_dir), triangles=tri)
 
 
 # ---------------------------------------------------------------------
@@ -425,9 +422,7 @@ def q_bfs_hops_parts(spark, sf_dir):
         .filter(F.col("p_brand") == "Brand#13")
         .select("p_partkey")
     )
-    out = G.bfs_hops(
-        _layout_edges(spark, sf_dir), seeds, max_hops=4, assume_canonical=True
-    )
+    out = G.bfs_hops(_layout_edges(spark, sf_dir), seeds, max_hops=4)
     return out.select("node", F.col("hop").cast("bigint").alias("hop"))
 
 
@@ -468,14 +463,7 @@ def q_graph_assortativity(spark, sf_dir):
     form). Every moment is an exact integer sum cast to double, so
     both engines evaluate the identical closed form; the oracle
     recomputes it relationally from the shared CO_PURCHASE_CTE."""
-    # r13 (VERDICT r12 #1): assume_canonical re-enabled — the operator
-    # now width-normalizes + materializes the canonical scan itself
-    # (coalesce to defaultParallelism + localCheckpoint, no exchange),
-    # so the corpus-scale identity shuffle of the r12-reverted default
-    # path is gone while the local task width matches it.
-    return G.degree_assortativity(
-        _layout_edges(spark, sf_dir), assume_canonical=True
-    )
+    return G.degree_assortativity(_layout_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------
@@ -531,12 +519,4 @@ def q_kcore_parts(spark, sf_dir):
     core (measured: 188/1992/19845 members at sf0.001/0.01/0.1,
     fixpoint ≤ 4 rounds). The oracle unrolls 8 peel rounds from the
     shared CO_PURCHASE_CTE; counts are exact integers — no rounding."""
-    # r13 (VERDICT r12 #1): assume_canonical re-enabled — kcore now
-    # materializes the canonical scan at defaultParallelism width
-    # (coalesce + localCheckpoint, no exchange) before the peel loop,
-    # keeping the r12-measured per-round task width without paying the
-    # identity distinct shuffle the reverted default path carried.
-    return G.kcore(
-        _layout_edges(spark, sf_dir), k=65, max_rounds=8,
-        assume_canonical=True,
-    )
+    return G.kcore(_layout_edges(spark, sf_dir), k=65, max_rounds=8)

@@ -20,7 +20,7 @@ from openetl_spark.queries.analytics_r06 import (
     CO_PURCHASE_CTE,
     co_purchase_edges,
 )
-from openetl_spark.queries.base import load, query
+from openetl_spark.queries.base import _repo_root, load, query
 
 # ---------------------------------------------------------------------
 # C115 — community detection by label propagation.
@@ -123,17 +123,6 @@ FROM tot
 # oracle-readable parquet, keyed by an exact graph signature.
 # ---------------------------------------------------------------------
 
-def _repo_root() -> str:
-    import os
-
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-
-# r09 (ADVICE): derived from the same repo-root computation
-# _graph_layout uses (was a hardcoded /root/repo absolute path — a
-# checkout anywhere else would have written outside the repository).
 LPA_ORACLE_LABELS = "{}/spark-warehouse/lpa_cache/labels_oracle.parquet".format(
     _repo_root()
 )
@@ -206,8 +195,9 @@ def _upsert_oracle_labels(pdf, graph_sig: int, rounds: int) -> None:
 
 def _graph_layout(spark, sf_dir: str) -> tuple[str, str]:
     """Get-or-build the persisted co-purchase GRAPH layout for one
-    testdata corpus: the canonical undirected edge list (a < b
-    distinct) and the weighted edge list (distinct-order co-occurrence
+    testdata corpus: the canonical undirected edge list
+    (``G.canonicalize`` of the co-purchase pairs — the one definition
+    of canonical the graph operators assume) and the weighted edge list (distinct-order co-occurrence
     counts) — the two relations every graph query previously re-derived
     from the lineitem self-join per invocation (~1.5–2 s each at
     sf0.1, × 7 queries). The offline-build/online-query posture of
@@ -242,14 +232,7 @@ def _graph_layout(spark, sf_dir: str) -> tuple[str, str]:
             shutil.rmtree(root, ignore_errors=True)  # stale: rebuild below
     if not os.path.exists(meta_path):  # meta written LAST = build complete
         par = spark.sparkContext.defaultParallelism
-        raw = co_purchase_edges(spark, sf_dir)
-        und = (
-            raw.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .distinct()
-        )
+        und = G.canonicalize(co_purchase_edges(spark, sf_dir))
         # Explicit-width write: the edge relation is ~20 MB at sf0.1,
         # which a size-based read coalesces into ONE scan partition —
         # starving every downstream join of parallelism (measured
@@ -326,8 +309,6 @@ def _triangle_layout(spark, sf_dir: str, core: bool = False) -> str:
     reason as the edge relation."""
     import os
 
-    from openetl_spark.operators import graph as G
-
     edges_path, edges_w_path = _graph_layout(spark, sf_dir)
     root = os.path.dirname(edges_path)
 
@@ -340,9 +321,7 @@ def _triangle_layout(spark, sf_dir: str, core: bool = False) -> str:
             )
         else:
             edges = spark.read.parquet(edges_path)
-        und, deg = G._undirected_simple(
-            edges, "src", "dst", assume_canonical=True
-        )
+        und, deg = G._undirected_simple(edges, "src", "dst")
         return G._oriented_triangles(und, deg)
 
     return _get_or_build_layout(
@@ -392,7 +371,7 @@ def _lpa_layout(spark, sf_dir: str, rounds: int = 4) -> tuple[str, str]:
             shutil.rmtree(root, ignore_errors=True)
     if not os.path.exists(meta_path):  # meta written LAST = build complete
         und = spark.read.parquet(edges_path).localCheckpoint()
-        labels = G.label_propagation(und, rounds=rounds, assume_canonical=True)
+        labels = G.label_propagation(und, rounds=rounds)
         labels.write.mode("overwrite").parquet(labels_path)
         os.makedirs(root, exist_ok=True)
         sig = _lpa_graph_sig(und)
@@ -511,9 +490,6 @@ def q_sssp_parts(spark, sf_dir):
         spark.read.parquet(edges_w_path),
         seeds,
         max_rounds=6,
-        # the weighted layout holds unique canonical pairs — the
-        # parallel-edge min-collapse is an identity there (r12)
-        assume_canonical=True,
     )
 
 
@@ -696,7 +672,6 @@ def q_graph_modularity(spark, sf_dir):
     return G.modularity(
         spark.read.parquet(edges_path),
         spark.read.parquet(labels_path),
-        assume_canonical=True,
     )
 
 

@@ -164,7 +164,6 @@ def q_louvain_communities(spark, sf_dir):
     return G.louvain_move(
         spark.read.parquet(edges_path),
         spark.read.parquet(labels_path),
-        assume_canonical=True,
     )
 
 
@@ -483,9 +482,7 @@ def q_ktruss_core(spark, sf_dir):
     # Round 1 peels the pristine core, whose triangle set is the
     # persisted layout (r10); later rounds re-enumerate on survivors.
     seed = spark.read.parquet(_triangle_layout(spark, sf_dir, core=True))
-    return G.ktruss(
-        e2, k=3, max_rounds=4, seed_triangles=seed, assume_canonical=True
-    )
+    return G.ktruss(e2, k=3, max_rounds=4, seed_triangles=seed)
 
 
 # ---------------------------------------------------------------------

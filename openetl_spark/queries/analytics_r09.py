@@ -23,7 +23,7 @@ from openetl_spark.queries.analytics_r07 import (
     _graph_layout,
     _lpa_layout,
 )
-from openetl_spark.queries.base import load, query
+from openetl_spark.queries.base import _repo_root, load, query
 from openetl_spark.queries.dedup_text import shingle_cte
 
 # ---------------------------------------------------------------------
@@ -98,9 +98,7 @@ def q_trussness_parts(spark, sf_dir):
     # Level 3 round 1 peels the pristine core — seed its enumeration
     # from the persisted triangle layout (r10).
     seed = spark.read.parquet(_triangle_layout(spark, sf_dir, core=True))
-    return G.trussness(
-        e2, max_k=4, max_rounds=6, seed_triangles=seed, assume_canonical=True
-    )
+    return G.trussness(e2, max_k=4, max_rounds=6, seed_triangles=seed)
 
 
 # ---------------------------------------------------------------------
@@ -246,7 +244,6 @@ def q_louvain_multilevel(spark, sf_dir):
         spark.read.parquet(edges_path),
         spark.read.parquet(labels_path),
         levels=2,
-        assume_canonical=True,
     )
 
 
@@ -604,9 +601,7 @@ def _walks_layout(spark, sf_dir: str) -> str:
             .filter(F.col("p_brand") == "Brand#13")
             .select("p_partkey")
         )
-        walks = G.random_walks(
-            edges, starts, length=_RW_LEN, seed=_RW_SEED, assume_canonical=True
-        )
+        walks = G.random_walks(edges, starts, length=_RW_LEN, seed=_RW_SEED)
         # The corpus is walkers × (length+1) rows — kilobytes; no
         # explicit-width spread needed (contrast the ~20 MB edge
         # relation).
@@ -864,7 +859,7 @@ def _landmark_hops_layout(spark, sf_dir: str):
 
     def build():
         core, lm = _core_and_landmarks(spark, sf_dir)
-        return G.landmark_hops(core, lm, max_hops=6, assume_canonical=True)
+        return G.landmark_hops(core, lm, max_hops=6)
 
     return spark.read.parquet(
         _get_or_build_layout(spark, root, "landmark_hops_h6", build)
@@ -1026,8 +1021,6 @@ def q_hyperball_report(spark, sf_dir):
 # EXACT bigint micro-nats — the float ln lives only in the B-sized
 # driver-side fit, never in the per-document path.
 # ---------------------------------------------------------------------
-
-from openetl_spark.queries.analytics_r07 import _repo_root  # noqa: E402
 
 _DSIR_B = 1024
 
@@ -1248,10 +1241,7 @@ def q_local_clustering(spark, sf_dir):
 
     core, _ = _core_and_landmarks(spark, sf_dir)
     tri = spark.read.parquet(_triangle_layout(spark, sf_dir, core=True))
-    # r13 (VERDICT r12 #1): assume_canonical re-enabled with the
-    # operator-side width-normalized materialization (coalesce +
-    # localCheckpoint, no identity shuffle).
-    return G.local_clustering(core, triangles=tri, assume_canonical=True)
+    return G.local_clustering(core, triangles=tri)
 
 
 @query(
@@ -1289,10 +1279,7 @@ def q_link_prediction_features(spark, sf_dir):
     pays), never all-pairs; on hub-heavy graphs the w-threshold on
     the core is the documented volume cap."""
     core, _ = _core_and_landmarks(spark, sf_dir)
-    # r13 (VERDICT r12 #1): assume_canonical re-enabled — the wedge
-    # self-join now reads the operator-materialized canonical scan
-    # (coalesce + localCheckpoint, no identity shuffle).
-    return G.link_prediction_features(core, assume_canonical=True)
+    return G.link_prediction_features(core)
 
 
 # ---------------------------------------------------------------------
@@ -1665,7 +1652,6 @@ def _node2vec_layout(spark, sf_dir: str) -> str:
             return G.node2vec_walks(
                 edges, starts, length=_N2V_LEN, seed=_N2V_SEED,
                 w_return=_N2V_WR, w_stay=_N2V_WS, w_out=_N2V_WO,
-                assume_canonical=True,
             )
 
         os.makedirs(root, exist_ok=True)
@@ -1807,9 +1793,7 @@ def q_link_prediction_hits(spark, sf_dir):
     common-neighbor method — n_reachable makes that honest instead
     of silently deflating recall). All counts exact bigints."""
     core, _ = _core_and_landmarks(spark, sf_dir)
-    return G.link_prediction_eval(
-        core, holdout_mod=5, ks=(1, 5, 10), assume_canonical=True
-    )
+    return G.link_prediction_eval(core, holdout_mod=5, ks=(1, 5, 10))
 
 
 # ---------------------------------------------------------------------

@@ -200,8 +200,7 @@ def q_effective_diameter_report(spark, sf_dir):
 
 from openetl_spark.operators import curation as C  # noqa: E402
 from openetl_spark.operators import text as X  # noqa: E402
-from openetl_spark.queries.base import load  # noqa: E402
-from openetl_spark.queries.analytics_r07 import _repo_root  # noqa: E402
+from openetl_spark.queries.base import _repo_root, load  # noqa: E402
 from openetl_spark.queries.analytics_r09 import (  # noqa: E402
     _DSIR_B,
     _doc_sig,
@@ -727,13 +726,7 @@ def q_core_numbers_parts(spark, sf_dir):
         .filter(F.col("w") >= 2)
         .select("src", "dst")
     )
-    # r13 (VERDICT r12 #1): assume_canonical re-enabled — core_numbers
-    # now materializes the canonical scan at defaultParallelism width
-    # (coalesce + localCheckpoint, no identity shuffle) before the
-    # peel ladder, fixing the r12 per-round task-overhead revert.
-    return G.core_numbers(
-        e2, max_k=_CN_MAX_K, max_rounds=_CN_ROUNDS, assume_canonical=True
-    )
+    return G.core_numbers(e2, max_k=_CN_MAX_K, max_rounds=_CN_ROUNDS)
 
 
 @query(
@@ -864,7 +857,7 @@ def _path_counts_layout(spark, sf_dir):
 
     def build():
         core, lm = _core_and_landmarks(spark, sf_dir)
-        return G.landmark_path_counts(core, lm, max_hops=6, assume_canonical=True)
+        return G.landmark_path_counts(core, lm, max_hops=6)
 
     return spark.read.parquet(
         _get_or_build_layout(spark, root, "path_counts_h6", build)
@@ -936,7 +929,7 @@ def _path_counts_full_layout(spark, sf_dir):
 
     def build():
         full, lm = _full_graph_and_landmarks(spark, sf_dir)
-        return G.landmark_path_counts(full, lm, max_hops=6, assume_canonical=True)
+        return G.landmark_path_counts(full, lm, max_hops=6)
 
     return spark.read.parquet(
         _get_or_build_layout(spark, root, "path_counts_full_h6", build)

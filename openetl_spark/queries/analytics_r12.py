@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from openetl_spark.operators import analytics as A
 from openetl_spark.operators import graph as G
 from openetl_spark.operators import similarity as S
-from openetl_spark.queries.base import load, query
+from openetl_spark.queries.base import _repo_root, load, query
 from openetl_spark.queries.analytics_r10 import (
     _FULL_LM_CTES,
     _full_graph_and_landmarks,
@@ -124,7 +124,7 @@ def q_betweenness_report(spark, sf_dir):
 # ---------------------------------------------------------------------
 
 NMI_ORACLE_DICT = (
-    "/root/repo/spark-warehouse/nmi_cache/micronats_oracle.parquet"
+    f"{_repo_root()}/spark-warehouse/nmi_cache/micronats_oracle.parquet"
 )
 _NMI_SCALE = 10**6
 
@@ -509,7 +509,7 @@ from openetl_spark.operators.curation import (  # noqa: E402
 )
 
 DP_ORACLE_BOUNDS = (
-    "/root/repo/spark-warehouse/dp_cache/discrete_laplace_bounds.parquet"
+    f"{_repo_root()}/spark-warehouse/dp_cache/discrete_laplace_bounds.parquet"
 )
 _DP_EPS_MICRO = 10**6  # ε = 1.0
 _DP_BOUND = 64

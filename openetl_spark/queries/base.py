@@ -91,6 +91,17 @@ def _load_uncached(
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def _repo_root() -> str:
+    """The checkout root: every persisted artifact (layouts, oracle
+    parquets, fingerprint caches) lives under
+    ``<checkout>/spark-warehouse``."""
+    import os
+
+    return os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 

@@ -20,7 +20,7 @@ from openetl_spark.operators import similarity as S
 from openetl_spark.operators import text as X
 from openetl_spark.operators import timeseries as TS
 from openetl_spark.plans.compiler import compile_connector
-from openetl_spark.queries.base import ORACLE, QUERIES, load, query
+from openetl_spark.queries.base import ORACLE, QUERIES, _repo_root, load, query
 from openetl_spark.queries.relational_extra import IVF_ORACLE_CENTROIDS, IVF_SIG_SQL, _corpus_sig, _ivf_layout
 from openetl_spark.queries.warehouse_ann import PQ_ORACLE_CODEBOOKS, _pq_codebooks, _ivf_pq_layout
 from openetl_spark.queries.dedup_text import shingle_cte, jaccard_ctes
@@ -58,10 +58,7 @@ def _lm_scores_layout(spark, sf_dir: str) -> str:
     import os
     import shutil
 
-    from openetl_spark.queries.analytics_r07 import (
-        _get_or_build_layout,
-        _repo_root,
-    )
+    from openetl_spark.queries.analytics_r07 import _get_or_build_layout
 
     key = os.path.basename(os.path.normpath(sf_dir))
     root = os.path.join(_repo_root(), "spark-warehouse", "lm_cache", key)

@@ -20,7 +20,7 @@ from openetl_spark.operators import similarity as S
 from openetl_spark.operators import text as X
 from openetl_spark.operators import timeseries as TS
 from openetl_spark.plans.compiler import compile_connector
-from openetl_spark.queries.base import ORACLE, QUERIES, load, query
+from openetl_spark.queries.base import ORACLE, QUERIES, _repo_root, load, query
 from openetl_spark.spec import Connector, Filter, FilterGroup, Sort, Transformation
 
 # ---------------------------------------------------------------------
@@ -37,7 +37,7 @@ from openetl_spark.spec import Connector, Filter, FilterGroup, Sort, Transformat
 # recomputation and corrupt-payload NULL behavior).
 # ---------------------------------------------------------------------
 
-MEDIA_FP_DIR = "/root/repo/spark-warehouse/media_fp"
+MEDIA_FP_DIR = f"{_repo_root()}/spark-warehouse/media_fp"
 
 
 def _media_fp_layout(spark, kind: str) -> str:

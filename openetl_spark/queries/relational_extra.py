@@ -21,7 +21,7 @@ from openetl_spark.operators import similarity as S
 from openetl_spark.operators import text as X
 from openetl_spark.operators import timeseries as TS
 from openetl_spark.plans.compiler import compile_connector
-from openetl_spark.queries.base import ORACLE, QUERIES, load, query
+from openetl_spark.queries.base import ORACLE, QUERIES, _repo_root, load, query
 from openetl_spark.spec import Connector, Filter, FilterGroup, Sort, Transformation
 
 # =====================================================================
@@ -720,7 +720,7 @@ def q_array_funcs_extended(spark, sf_dir):
 
 
 
-IVF_ORACLE_CENTROIDS = "/root/repo/spark-warehouse/ivf_cache/centroids_oracle.parquet"
+IVF_ORACLE_CENTROIDS = f"{_repo_root()}/spark-warehouse/ivf_cache/centroids_oracle.parquet"
 
 
 def _ivf_layout(spark, sf_dir: str, n_lists: int = 16, seed: int = 42):
@@ -747,9 +747,8 @@ def _ivf_layout(spark, sf_dir: str, n_lists: int = 16, seed: int = 42):
 
     import numpy as np
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     key = f"{os.path.basename(os.path.normpath(sf_dir))}_l{n_lists}_s{seed}"
-    root = os.path.join(repo, "spark-warehouse", "ivf_cache", key)
+    root = os.path.join(_repo_root(), "spark-warehouse", "ivf_cache", key)
     cents_path = os.path.join(root, "centroids.npy")
     meta_path = os.path.join(root, "meta.json")
     data_path = os.path.join(root, "corpus")

@@ -20,11 +20,11 @@ from openetl_spark.operators import similarity as S
 from openetl_spark.operators import text as X
 from openetl_spark.operators import timeseries as TS
 from openetl_spark.plans.compiler import compile_connector
-from openetl_spark.queries.base import ORACLE, QUERIES, load, query
+from openetl_spark.queries.base import ORACLE, QUERIES, _repo_root, load, query
 from openetl_spark.queries.relational_extra import IVF_ORACLE_CENTROIDS, IVF_SIG_SQL, _corpus_sig, _ivf_layout
 from openetl_spark.spec import Connector, Filter, FilterGroup, Sort, Transformation
 
-PQ_ORACLE_CODEBOOKS = "/root/repo/spark-warehouse/pq_cache/codebooks_oracle.parquet"
+PQ_ORACLE_CODEBOOKS = f"{_repo_root()}/spark-warehouse/pq_cache/codebooks_oracle.parquet"
 
 
 def _upsert_oracle_codebooks(books, corpus_sig: int, n_codes: int, seed: int) -> None:
@@ -78,9 +78,8 @@ def _pq_codebooks(spark, sf_dir: str, m: int = 4, n_codes: int = 16, seed: int =
 
     import numpy as np
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     key = f"{os.path.basename(os.path.normpath(sf_dir))}_m{m}_c{n_codes}_s{seed}"
-    root = os.path.join(repo, "spark-warehouse", "pq_cache", key)
+    root = os.path.join(_repo_root(), "spark-warehouse", "pq_cache", key)
     books_path = os.path.join(root, "codebooks.npy")
     meta_path = os.path.join(root, "meta.json")
     if not os.path.exists(books_path):
@@ -530,12 +529,13 @@ def _ivf_pq_layout(
 
     cents, _ = _ivf_layout(spark, sf_dir, n_lists=n_lists, seed=seed)
     books = _pq_codebooks(spark, sf_dir, m=m, n_codes=n_codes, seed=seed)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     key = (
         f"{os.path.basename(os.path.normpath(sf_dir))}"
         f"_l{n_lists}_m{m}_c{n_codes}_s{seed}"
     )
-    data_path = os.path.join(repo, "spark-warehouse", "ivf_pq_cache", key, "corpus")
+    data_path = os.path.join(
+        _repo_root(), "spark-warehouse", "ivf_pq_cache", key, "corpus"
+    )
     if not os.path.exists(data_path):
         e = load(spark, sf_dir, "embeddings", spread=True)
         enc = S.with_pq_codes(S.with_ivf_assignment(e, cents), books)

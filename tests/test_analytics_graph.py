@@ -149,7 +149,7 @@ def test_contract_pair_equals_contract_graph(spark):
     mov = spark.createDataFrame(
         [(i, int((i * 7) % 4)) for i in range(n)], "node int, label int"
     )
-    und, _ = G._undirected_simple(df, "src", "dst")
+    und, _ = G._undirected_simple(G.canonicalize(df), "src", "dst")
     got_lab, got_mov = G._contract_pair(und, lab, mov)
     want_lab = G.contract_graph(df, lab)
     want_mov = G.contract_graph(df, mov)
@@ -280,7 +280,7 @@ def test_triangle_stats_known_graphs(spark):
     # duplicate/reversed edges must collapse away.
     path = [(0, 1), (1, 0), (1, 2), (2, 3), (3, 3), (2, 3)]
     (row,) = G.triangle_stats(
-        spark.createDataFrame(path, "src int, dst int")
+        G.canonicalize(spark.createDataFrame(path, "src int, dst int"))
     ).collect()
     assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 3, 0)
     assert row["n_wedges"] == 2
@@ -670,7 +670,7 @@ def test_label_propagation_tie_breaks_to_smallest_label(spark):
     """Node 9's neighbors carry labels {1: x1, 2: x1} after round 1 —
     the count tie must break to the smaller label."""
     # star: 9 connected to 1 and 2 (and 1-2 not connected)
-    df = spark.createDataFrame([(9, 1), (9, 2)], "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame([(9, 1), (9, 2)], "src int, dst int"))
     got = {r["node"]: r["label"] for r in G.label_propagation(df, rounds=1).collect()}
     # round 1: 9 sees {1, 2} -> 1; 1 sees {9} -> 9; 2 sees {9} -> 9
     assert got == {9: 1, 1: 9, 2: 9}
@@ -722,7 +722,8 @@ def test_sssp_parallel_edges_collapse_to_cheapest(spark):
         [(0, 1, 9), (1, 0, 2), (0, 1, 5)], "src int, dst int, w long"
     )
     seeds = spark.createDataFrame([(0,)], "node int")
-    got = {r["node"]: r["dist"] for r in G.sssp(df, seeds).collect()}
+    canon = G.canonicalize(df, weight="w")
+    got = {r["node"]: r["dist"] for r in G.sssp(canon, seeds).collect()}
     assert got == {0: 0, 1: 2}
 
 
@@ -1050,7 +1051,7 @@ def test_louvain_improves_modularity_over_lpa(spark, sf_dir):
     from openetl_spark.queries.analytics_r06 import co_purchase_edges
     from openetl_spark.queries.analytics_r07 import _lpa_layout
 
-    edges = co_purchase_edges(spark, sf_dir).localCheckpoint()
+    edges = G.canonicalize(co_purchase_edges(spark, sf_dir)).localCheckpoint()
     labels_path, _ = _lpa_layout(spark, sf_dir, rounds=4)
     lpa = spark.read.parquet(labels_path)
     q_lpa = G.modularity(edges, lpa).first()["modularity"]
@@ -1112,7 +1113,7 @@ def test_ktruss_matches_bruteforce_fixpoint(spark, seed, k):
     rng = random.Random(seed)
     edges = list({(rng.randrange(16), rng.randrange(16)) for _ in range(60)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     got = {(r["a"], r["b"]) for r in G.ktruss(df, k, max_rounds=12).collect()}
     assert got == _brute_ktruss(edges, k)
 
@@ -1290,7 +1291,7 @@ def test_louvain_weighted_equals_unweighted_on_simple_graph(spark):
     rng = random.Random(9)
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(40)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lab0 = (
         df.selectExpr("src as node")
         .union(df.selectExpr("dst as node"))
@@ -1300,12 +1301,8 @@ def test_louvain_weighted_equals_unweighted_on_simple_graph(spark):
     want = {(r["node"], r["label"]) for r in G.louvain_move(df, lab0).collect()}
     from pyspark.sql import functions as F
 
-    ew = (
-        df.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .withColumn("w", F.lit(1))
+    ew = df.select(
+        F.col("src").alias("a"), F.col("dst").alias("b"), F.lit(1).alias("w")
     )
     got = {(r["node"], r["label"]) for r in G.louvain_move_weighted(ew, lab0).collect()}
     assert got == want
@@ -1369,7 +1366,7 @@ def test_louvain_refine_never_decreases_q(spark, seed):
     rng = random.Random(seed)
     edges = list({(rng.randrange(14), rng.randrange(14)) for _ in range(45)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     nodes = sorted({n for e in edges for n in e})
     lab = spark.createDataFrame(
         [(n, rng.randrange(4)) for n in nodes], "node int, label int"
@@ -1480,7 +1477,7 @@ def test_trussness_matches_bruteforce(spark, seed):
     rng = random.Random(seed)
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(40)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     want = _py_trussness(edges, max_k=8)
     got = {
         (r["a"], r["b"]): r["trussness"]
@@ -1497,7 +1494,7 @@ def test_trussness_consistent_with_ktruss(spark):
     rng = random.Random(7)
     edges = list({(rng.randrange(10), rng.randrange(10)) for _ in range(35)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     dec = G.trussness(df, max_k=8, max_rounds=12)
     for k in (3, 4, 5):
         want = {
@@ -1566,7 +1563,7 @@ def test_louvain_multilevel_q_monotone(spark, seed):
     rng = random.Random(seed)
     edges = list({(rng.randrange(14), rng.randrange(14)) for _ in range(45)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     nodes = sorted({n for e in edges for n in e})
     lab = spark.createDataFrame(
         [(n, rng.randrange(4)) for n in nodes], "node int, label int"
@@ -1583,7 +1580,7 @@ def test_louvain_multilevel_deterministic(spark):
     rng = random.Random(99)
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(35)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     nodes = sorted({n for e in edges for n in e})
     lab = spark.createDataFrame([(n, n) for n in nodes], "node int, label int")
     a = sorted(tuple(r) for r in G.louvain_multilevel(df, lab, levels=2).collect())
@@ -1738,9 +1735,9 @@ def test_random_walks_structure_and_determinism(spark):
     """Walks stay on edges, every live walker advances one node per
     step, and the whole corpus is a pure function of (graph, starts,
     seed)."""
-    edges = spark.createDataFrame(
+    edges = G.canonicalize(spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (2, 4)], "src long, dst long"
-    )
+    ))
     starts = spark.createDataFrame([(1,), (3,)], "n long")
     w1 = sorted(tuple(r) for r in G.random_walks(edges, starts, 5, seed=7).collect())
     w2 = sorted(tuple(r) for r in G.random_walks(edges, starts, 5, seed=7).collect())
@@ -1797,7 +1794,9 @@ def test_random_walks_validation(spark):
 # ----------------------------------------- landmark hops / harmonic
 
 def _edges_df(spark, pairs):
-    return spark.createDataFrame(pairs, "src long, dst long")
+    """Canonical edges (the graph operators' input contract) from any
+    pair list — reversed, repeated or self-loop pairs included."""
+    return G.canonicalize(spark.createDataFrame(pairs, "src long, dst long"))
 
 
 def test_landmark_hops_path_graph_hand_case(spark):
@@ -2192,7 +2191,7 @@ def test_core_numbers_matches_bruteforce(spark, seed):
     rng = random.Random(seed)
     edges = list({(rng.randrange(14), rng.randrange(14)) for _ in range(45)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     want = _py_core_numbers(edges, max_k=8)
     got = {
         r["node"]: r["core"]
@@ -2208,7 +2207,7 @@ def test_core_numbers_consistent_with_kcore(spark):
     rng = random.Random(5)
     edges = list({(rng.randrange(10), rng.randrange(10)) for _ in range(30)})
     edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     dec = G.core_numbers(df, max_k=7, max_rounds=14)
     for k in (2, 3, 4):
         want = {
@@ -2388,7 +2387,7 @@ def test_landmark_path_counts_matches_bruteforce(spark, seed):
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(30)})
     edges = [e for e in edges if e[0] != e[1]]
     sources = sorted({e[0] for e in edges})[:3]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lm = spark.createDataFrame([(s,) for s in sources], "node int")
     want = _py_path_counts(edges, sources, max_hops=5)
     got = {
@@ -2422,7 +2421,7 @@ def test_landmark_stress_matches_bruteforce(spark):
             dt, st_ = pc[(t, v)]
             if ds + dt == d_st:
                 want[v] = want.get(v, 0) + ss * st_
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lm = spark.createDataFrame([(s,) for s in sources], "node int")
     pcs = G.landmark_path_counts(df, lm, max_hops=6)
     import pyspark.sql.functions as F
@@ -2632,7 +2631,7 @@ def test_landmark_pair_dependencies_matches_bruteforce(spark, seed):
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(32)})
     edges = [e for e in edges if e[0] != e[1]]
     sources = sorted({e[0] for e in edges})[:4]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lm = spark.createDataFrame([(s,) for s in sources], "node int")
     pc = G.landmark_path_counts(df, lm, max_hops=6)
     got = {
@@ -2653,7 +2652,7 @@ def test_landmark_pair_dependencies_interior_sum_invariant(spark):
     edges = list({(rng.randrange(14), rng.randrange(14)) for _ in range(40)})
     edges = [e for e in edges if e[0] != e[1]]
     sources = sorted({e[0] for e in edges})[:5]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lm = spark.createDataFrame([(s,) for s in sources], "node int")
     pc = G.landmark_path_counts(df, lm, max_hops=6)
     deps = G.landmark_pair_dependencies(pc, lm).collect()
@@ -2690,7 +2689,7 @@ def test_betweenness_scores_match_bruteforce(spark, seed):
     edges = list({(rng.randrange(12), rng.randrange(12)) for _ in range(32)})
     edges = [e for e in edges if e[0] != e[1]]
     sources = sorted({e[0] for e in edges})[:4]
-    df = spark.createDataFrame(edges, "src int, dst int")
+    df = G.canonicalize(spark.createDataFrame(edges, "src int, dst int"))
     lm = spark.createDataFrame([(s,) for s in sources], "node int")
     pc = G.landmark_path_counts(df, lm, max_hops=6)
     deps = G.landmark_pair_dependencies(pc, lm)
@@ -2821,92 +2820,131 @@ def test_skipgram_negative_pairs_validation(spark):
 
 
 # ---------------------------------------------------------------------
-# r12 optimization: the assume_canonical fast path (skip the identity
-# re-canonicalization shuffle on persisted-layout reads, guide §2.4)
-# must be a pure plan change — flag-on ≡ flag-off on the REAL layout
-# relations, and the flag-on plan must contain no Exchange for the
-# und derivation.
+# The canonical-edge contract: canonicalize() is the one normalization,
+# the persisted layouts are its fixpoint, and every operator reads a
+# layout exactly as it reads canonicalize(raw edges).
 # ---------------------------------------------------------------------
 
 
-def test_assume_canonical_equivalence_on_layout(spark, sf_dir):
-    from openetl_spark.queries.analytics_r07 import _graph_layout
+def _canonical_py(rows):
+    """Plain-Python canonical form: (min, max) pairs without self-loops;
+    a third field collapses to the min over non-NULL values."""
+    out = {}
+    for r in rows:
+        if r[0] == r[1]:
+            continue
+        key = (min(r[0], r[1]), max(r[0], r[1]))
+        if len(r) == 2:
+            out[key] = None
+        else:
+            vals = [v for v in (out.get(key), r[2]) if v is not None]
+            out[key] = min(vals) if vals else None
+    return out
 
-    ep, ewp = _graph_layout(spark, sf_dir)
-    e = spark.read.parquet(ep)
-    ew = spark.read.parquet(ewp)
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    u1, d1 = G._undirected_simple(e, "src", "dst")
-    u2, d2 = G._undirected_simple(e, "src", "dst", assume_canonical=True)
-    assert rows(u1) == rows(u2)
-    assert rows(d1) == rows(d2)
-
-    seeds = e.select("src").distinct().limit(5)
-    assert rows(G.bfs_hops(e, seeds, max_hops=4)) == rows(
-        G.bfs_hops(e, seeds, max_hops=4, assume_canonical=True)
+def test_canonicalize_matches_python(spark):
+    pairs = [(1, 2), (2, 1), (1, 2), (3, 3), (4, 1), (1, 4), (5, 6)]
+    got = G.canonicalize(spark.createDataFrame(pairs, "src int, dst int"))
+    assert got.columns == ["src", "dst"]
+    assert sorted(map(tuple, got.collect())) == sorted(_canonical_py(pairs))
+    weighted = [
+        (1, 2, 5), (2, 1, 3), (1, 2, 9), (3, 3, 1), (4, 1, 7),
+        (5, 6, None), (6, 5, 4), (7, 8, None),
+    ]
+    got_w = G.canonicalize(
+        spark.createDataFrame(weighted, "x int, y int, c long"), "x", "y", weight="c"
     )
-    assert rows(G.sssp(ew, seeds, max_rounds=6)) == rows(
-        G.sssp(ew, seeds, max_rounds=6, assume_canonical=True)
-    )
-    assert rows(G.kcore(e, k=10, max_rounds=8)) == rows(
-        G.kcore(e, k=10, max_rounds=8, assume_canonical=True)
-    )
+    assert got_w.columns == ["x", "y", "c"]
+    want = _canonical_py(weighted)
+    assert want == {(1, 2): 3, (1, 4): 7, (5, 6): 4, (7, 8): None}
+    assert {(r["x"], r["y"]): r["c"] for r in got_w.collect()} == want
 
 
-def test_assume_canonical_materialize_equivalence(spark, sf_dir):
-    """r13 (VERDICT r12 #1): the width-normalized materializing
-    canonical path (coalesce to defaultParallelism + localCheckpoint,
-    no identity shuffle) must stay a pure plan change — flag-on ≡
-    flag-off on the REAL layout for the five operators re-enabled this
-    round (kcore is covered by the r12 test above)."""
+def _layout_and_raw(spark, sf_dir):
+    """The persisted layout relations and messy raw renderings of the
+    same graphs: every edge repeated and reversed, weighted copies
+    heavier than the original so the min-collapse must pick it."""
     from pyspark.sql import functions as F
 
+    from openetl_spark.queries.analytics_r06 import co_purchase_edges
     from openetl_spark.queries.analytics_r07 import _graph_layout
 
     ep, ewp = _graph_layout(spark, sf_dir)
-    e = spark.read.parquet(ep)
-    core = (
-        spark.read.parquet(ewp)
-        .filter(F.col("w") >= 2)
-        .select("src", "dst")
+    e, ew = spark.read.parquet(ep), spark.read.parquet(ewp)
+    core = ew.filter(F.col("w") >= 2).select("src", "dst")
+
+    def flip(df, *rest):
+        return df.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest)
+
+    raw = co_purchase_edges(spark, sf_dir)
+    raw = raw.unionByName(flip(raw))
+    raw_w = ew.unionByName(flip(ew, (F.col("w") + 1).alias("w"))).unionByName(
+        ew.withColumn("w", F.col("w") + 2)
     )
+    raw_core = core.unionByName(flip(core)).unionByName(core)
+    return e, ew, core, raw, raw_w, raw_core
+
+
+def test_canonicalize_is_identity_on_layout(spark, sf_dir):
+    from openetl_spark.queries.analytics_r07 import co_purchase_edges_weighted
+
+    e, ew, _, raw, raw_w, _ = _layout_and_raw(spark, sf_dir)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    u1, d1 = G._undirected_simple(e, "src", "dst")
-    u2, d2 = G._undirected_simple(
-        e, "src", "dst", assume_canonical=True, materialize=True
+    want_e, want_ew = rows(e), rows(ew)
+    assert rows(G.canonicalize(e)) == want_e
+    assert rows(G.canonicalize(ew, weight="w")) == want_ew
+    assert rows(G.canonicalize(raw)) == want_e
+    assert rows(G.canonicalize(raw_w, weight="w")) == want_ew
+    assert (
+        rows(G.canonicalize(co_purchase_edges_weighted(spark, sf_dir), weight="w"))
+        == want_ew
     )
-    assert rows(u1) == rows(u2)
-    assert rows(d1) == rows(d2)
+    assert rows(ew.select("src", "dst")) == want_e
 
-    assert rows(G.degree_assortativity(e)) == rows(
-        G.degree_assortativity(e, assume_canonical=True)
+
+def test_operators_read_layout_as_canonicalized_raw_edges(spark, sf_dir):
+    """operator(layout) ≡ operator(canonicalize(raw)) for the operators
+    the catalog runs on the persisted layouts."""
+    e, ew, core, raw, raw_w, raw_core = _layout_and_raw(spark, sf_dir)
+    ce = G.canonicalize(raw).localCheckpoint()
+    cew = G.canonicalize(raw_w, weight="w").localCheckpoint()
+    ccore = G.canonicalize(raw_core).localCheckpoint()
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    seeds = e.select("src").distinct().orderBy("src").limit(5)
+    assert rows(G.bfs_hops(e, seeds, max_hops=4)) == rows(
+        G.bfs_hops(ce, seeds, max_hops=4)
     )
+    assert rows(G.sssp(ew, seeds, max_rounds=6)) == rows(
+        G.sssp(cew, seeds, max_rounds=6)
+    )
+    assert rows(G.kcore(e, k=10, max_rounds=8)) == rows(
+        G.kcore(ce, k=10, max_rounds=8)
+    )
+    assert rows(G.degree_assortativity(e)) == rows(G.degree_assortativity(ce))
     assert rows(G.core_numbers(core, max_k=3, max_rounds=12)) == rows(
-        G.core_numbers(core, max_k=3, max_rounds=12, assume_canonical=True)
+        G.core_numbers(ccore, max_k=3, max_rounds=12)
     )
-    assert rows(G.local_clustering(core)) == rows(
-        G.local_clustering(core, assume_canonical=True)
-    )
+    assert rows(G.local_clustering(core)) == rows(G.local_clustering(ccore))
     assert rows(G.link_prediction_features(core)) == rows(
-        G.link_prediction_features(core, assume_canonical=True)
+        G.link_prediction_features(ccore)
     )
 
 
-def test_assume_canonical_plan_has_no_exchange(spark, sf_dir):
-    """The canonical-path und relation must stay a bare aliased scan:
-    zero Exchange (no distinct shuffle), zero ExistingRDD (no
-    localCheckpoint copy) — the r12 plan contract."""
+def test_undirected_simple_on_layout_plans_no_exchange(spark, sf_dir):
+    """On a layout read the und relation is a bare aliased scan: zero
+    Exchange (no distinct shuffle), zero ExistingRDD (no
+    localCheckpoint copy)."""
     from openetl_spark.queries.analytics_r07 import _graph_layout
 
     ep, _ = _graph_layout(spark, sf_dir)
     e = spark.read.parquet(ep)
-    und, _deg = G._undirected_simple(e, "src", "dst", assume_canonical=True)
+    und, _deg = G._undirected_simple(e, "src", "dst")
     plan = und._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ExistingRDD" not in plan
