@@ -2905,33 +2905,50 @@ def test_canonicalize_is_identity_on_layout(spark, sf_dir):
     assert rows(ew.select("src", "dst")) == want_e
 
 
-def test_operators_read_layout_as_canonicalized_raw_edges(spark, sf_dir):
-    """operator(layout) ≡ operator(canonicalize(raw)) for the operators
-    the catalog runs on the persisted layouts."""
-    e, ew, core, raw, raw_w, raw_core = _layout_and_raw(spark, sf_dir)
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_assume_canonical_equivalence_on_layout(spark, sf_dir):
+    """operator(layout) ≡ operator(canonicalize(raw)) for the frontier
+    operators (bfs_hops, sssp, kcore) and the shared und/deg derivation.
+    These once compared an assume_canonical=True run to the default;
+    the flag is gone and the canonical-edge contract is what remains."""
+    e, ew, _, raw, raw_w, _ = _layout_and_raw(spark, sf_dir)
     ce = G.canonicalize(raw).localCheckpoint()
     cew = G.canonicalize(raw_w, weight="w").localCheckpoint()
-    ccore = G.canonicalize(raw_core).localCheckpoint()
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
+    u1, d1 = G._undirected_simple(e, "src", "dst")
+    u2, d2 = G._undirected_simple(ce, "src", "dst")
+    assert _rows(u1) == _rows(u2)
+    assert _rows(d1) == _rows(d2)
 
     seeds = e.select("src").distinct().orderBy("src").limit(5)
-    assert rows(G.bfs_hops(e, seeds, max_hops=4)) == rows(
+    assert _rows(G.bfs_hops(e, seeds, max_hops=4)) == _rows(
         G.bfs_hops(ce, seeds, max_hops=4)
     )
-    assert rows(G.sssp(ew, seeds, max_rounds=6)) == rows(
+    assert _rows(G.sssp(ew, seeds, max_rounds=6)) == _rows(
         G.sssp(cew, seeds, max_rounds=6)
     )
-    assert rows(G.kcore(e, k=10, max_rounds=8)) == rows(
+    assert _rows(G.kcore(e, k=10, max_rounds=8)) == _rows(
         G.kcore(ce, k=10, max_rounds=8)
     )
-    assert rows(G.degree_assortativity(e)) == rows(G.degree_assortativity(ce))
-    assert rows(G.core_numbers(core, max_k=3, max_rounds=12)) == rows(
+
+
+def test_assume_canonical_materialize_equivalence(spark, sf_dir):
+    """operator(layout) ≡ operator(canonicalize(raw)) for the operators
+    that materialize the und relation (degree_assortativity,
+    core_numbers, local_clustering, link_prediction_features)."""
+    e, _, core, raw, _, raw_core = _layout_and_raw(spark, sf_dir)
+    ce = G.canonicalize(raw).localCheckpoint()
+    ccore = G.canonicalize(raw_core).localCheckpoint()
+
+    assert _rows(G.degree_assortativity(e)) == _rows(G.degree_assortativity(ce))
+    assert _rows(G.core_numbers(core, max_k=3, max_rounds=12)) == _rows(
         G.core_numbers(ccore, max_k=3, max_rounds=12)
     )
-    assert rows(G.local_clustering(core)) == rows(G.local_clustering(ccore))
-    assert rows(G.link_prediction_features(core)) == rows(
+    assert _rows(G.local_clustering(core)) == _rows(G.local_clustering(ccore))
+    assert _rows(G.link_prediction_features(core)) == _rows(
         G.link_prediction_features(ccore)
     )
 
