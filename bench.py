@@ -189,6 +189,13 @@ HEADLINE = [
 MEDIAN_CUTOFF_SEC = 30.0
 
 
+def _compilations(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: each one is a
+    miss in Spark's generated-code cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _run_once(fn, spark) -> float:
     t0 = time.perf_counter()
     fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -321,14 +328,17 @@ def main() -> None:
         names += tail
 
     timings: dict[str, float] = {}
+    compilations: dict[str, int] = {}
     for name in names:
         fn = catalog.QUERIES[name]
+        compiled0 = _compilations(spark)
         first = _run_once(fn, spark)
         if first < MEDIAN_CUTOFF_SEC:
             runs = sorted([first, _run_once(fn, spark), _run_once(fn, spark)])
             timings[name] = round(runs[1], 3)
         else:
             timings[name] = round(first, 3)
+        compilations[name] = _compilations(spark) - compiled0
         # stream one short line per query so a truncated capture still
         # carries partial data and the final summary stays small
         print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
@@ -356,6 +366,8 @@ def main() -> None:
         "value": headline_total,
         "unit": "sec",
         "queries": timings,
+        # Janino compilations over each query's timed runs (name -> count).
+        "codegen_compilations": compilations,
         "sf": float(sf),
         "n_queries": len([n for n in HEADLINE if n in timings]),
         "full_total_sec": round(sum(timings.values()), 3),
@@ -383,7 +395,8 @@ def main() -> None:
         json.dump(payload, f, indent=1)
     summary = dict(payload)
     if len(json.dumps(payload)) > 2048:
-        del summary["queries"]  # keep the tail-captured line short
+        # keep the tail-captured line short
+        del summary["queries"], summary["codegen_compilations"]
     # LAST line: the parseable summary (tail captures read bottom-up)
     print(json.dumps(summary), flush=True)
 

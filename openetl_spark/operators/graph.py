@@ -2738,13 +2738,7 @@ def link_prediction_eval(
     marked = und.withColumn("_t", (h == 0).cast("int")).localCheckpoint()
     test = marked.filter(F.col("_t") == 1).select("a", "b")
     train = marked.filter(F.col("_t") == 0).select("a", "b")
-    # train is already canonical (a subset of und), so this canonicalize
-    # is an identity; it is kept to leave the catalog's
-    # link_prediction_hits plan and job count unchanged — dropping it
-    # saves the distinct's two jobs.
-    feats = link_prediction_features(
-        canonicalize(train, "a", "b"), src="a", dst="b"
-    )
+    feats = link_prediction_features(train, src="a", dst="b")
     both = feats.select(
         F.col("a").alias("node"), F.col("b").alias("v"), "cn", "jden"
     ).unionByName(
